@@ -205,7 +205,6 @@ def _star_round(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 20,
-    n_salts: int = 8,  # kept for API compat; map-side combine replaced salting
 ) -> DataFrame:
     """Connected components over an edge frame: (entity_id, canonical_id).
 
@@ -217,7 +216,6 @@ def connected_components(
     convergence is detected by a (count, xxhash-sum) edge-set signature —
     two cheap aggregates, no exceptAll.
     """
-    _ = n_salts
     # The incoming pairs plan (typically an LSH band join) is referenced
     # three times below — once by the edge frame and twice by the node
     # union. Checkpoint it ONCE so the upstream plan executes once and
@@ -230,8 +228,9 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # consumed exactly once (the final mapping join) — lazy checkpoint
-    # folds its job into that action; it reads the cached pairs blocks
+    # read only by the final mapping join — lazy checkpoint: whichever
+    # caller action first runs that join materializes it (no job of its
+    # own); it reads the cached pairs blocks
     all_nodes = (
         pairs.select(F.col("a").alias("entity_id"))
         .unionByName(pairs.select(F.col("b").alias("entity_id")))

@@ -186,9 +186,7 @@ def _materialize(df: DataFrame, tag: str = "") -> DataFrame:
     return out
 
 
-def _materialize_all(
-    named: dict[str, DataFrame], concurrent: bool | None = None
-) -> dict[str, DataFrame]:
+def _materialize_all(named: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """Materialize several INDEPENDENT stage frames concurrently.
 
     Each entry is ``_materialize``d on its own driver thread: while one
@@ -202,15 +200,8 @@ def _materialize_all(
     Correctness precondition: every ancestor SHARED by two entries must
     already be checkpointed/persisted (call sites only pass plans over
     the materialized mentions/entities/alias/closure frames), so
-    concurrent jobs never race to compute a shared parent twice.
-    ``CGR_SEQUENTIAL_STAGES=1`` restores serial submission (the A/B and
-    fallback knob); ``concurrent=False`` (the scale-adaptive gate, see
-    ``_concurrent_policy``) does the same per call site. Dict order =
-    submission order; put the critical-path frame first."""
-    if concurrent is None:
-        concurrent = not os.environ.get("CGR_SEQUENTIAL_STAGES")
-    if not concurrent or len(named) <= 1:
-        return {k: _materialize(df, k) for k, df in named.items()}
+    concurrent jobs never race to compute a shared parent twice. Dict
+    order = submission order; put the critical-path frame first."""
     with ThreadPoolExecutor(max_workers=len(named)) as ex:
         futs = [(k, ex.submit(_materialize, df, k)) for k, df in named.items()]
         return {k: f.result() for k, f in futs}
@@ -240,44 +231,8 @@ def _mark(tag: str) -> None:
 #     their broadcast-build rescans) are fixed-cost-dominated — they read
 #     the NARROW view (~400k rows ≈ 128 MB/partition; the edges_prov union
 #     measured 44 s over a 9-partition base vs 8 s over 3).
-_WIDE_ROWS_PER_PARTITION = int(
-    os.environ.get("CGR_WIDE_ROWS_PER_PARTITION", "30000")
-)
-_JOIN_ROWS_PER_PARTITION = int(
-    os.environ.get("CGR_JOIN_ROWS_PER_PARTITION", "400000")
-)
-
-
-def _concurrent_policy(n_mention_rows: int) -> bool:
-    """Scale-adaptive join-phase submission policy.
-
-    Concurrent driver-thread submission overlaps per-stage driver gaps
-    (Catalyst, AQE replans, scheduler submit) with other branches' tasks —
-    a ~20% wall win measured at 20k-60k docs on local[4]/local[16] (r5).
-    The threshold history: an early-r6 pooled A/B across three heavily
-    contended sessions (legs spread 29-73 s) read serial slightly ahead at
-    2k docs by MEDIAN (42.9 vs 48.0, 6 of 10 matched rounds) and the gate
-    was set at 400k rows; a later 5-round alternating A/B in normal
-    windows read concurrent ahead in ALL 5 matched rounds at the same
-    configuration (median 18.04 vs 19.77, min 17.87 vs 19.24, LOWER
-    variance) — and even the contended pooled data had the better MIN on
-    the concurrent side (29.0 vs 32.6; min is the protocol's
-    least-contaminated observation). So the overlap pays at bench scale
-    too, and the gate now only keeps genuinely tiny scoped/incremental
-    rebuilds (a few docs' blast radius) serial, where per-job fixed cost
-    is everything and there is nothing to overlap. A follow-up 3-round
-    A/B on the 41k-row JS bench corpus read concurrent ahead in every
-    matched round there as well (min 11.56 vs 13.01, median ~13.1 vs
-    ~15.0), so the floor sits at 10k rows — below it no leg was ever
-    measured and the jobs are sub-second. The gate is DATA-driven
-    (row count), never core count, so the same rule holds on a cluster.
-    ``CGR_SEQUENTIAL_STAGES=1`` forces serial everywhere;
-    ``CGR_CONCURRENT_MIN_ROWS`` moves the threshold."""
-    if os.environ.get("CGR_SEQUENTIAL_STAGES"):
-        return False
-    return n_mention_rows >= int(
-        os.environ.get("CGR_CONCURRENT_MIN_ROWS", "10000")
-    )
+_WIDE_ROWS_PER_PARTITION = 30000
+_JOIN_ROWS_PER_PARTITION = 400000
 
 
 def _narrow(df: DataFrame, rows: int, per_part: int, tag: str) -> DataFrame:
@@ -317,54 +272,38 @@ def build_graph_from_mentions(
     wide = _materialize(disambiguate_modules(raw_mentions), "mentions")
     from code_graph_rag_spark.plans.cpp_impl import bind_method_impls
 
-    if os.environ.get("CGR_SEQUENTIAL_STAGES"):
-        # the pre-overlap serial sequence, kept verbatim for A/B runs:
-        # count → narrow views → deferred-C++ isEmpty probe → entities
-        n_rows = wide.count()
-        wide = _narrow(wide, n_rows, _WIDE_ROWS_PER_PARTITION, "mentions_wide")
-        mentions = _narrow(wide, n_rows, _JOIN_ROWS_PER_PARTITION, "mentions")
-        bound = bind_method_impls(mentions)
-        if bound is not mentions:
-            mentions = _materialize(bound, "mentions_cpp_bound")
-            wide = mentions
+    # one action returns (row count, any-method_impl): the dual-width
+    # sizing count and the deferred-C++ probe share a scan instead of
+    # chaining two. Entities mint concurrently with it — speculative:
+    # mint_entities is partitioning-independent (window results keyed
+    # by stable sort keys), so minting from the pre-narrow view gives
+    # identical rows UNLESS a method_impl rewrite invalidates the
+    # mention store (C++ corpora only), in which case entities are
+    # minted again below and the speculative frame is dropped (its
+    # checkpoint blocks are ContextCleaner-reclaimed).
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        f_ent = ex.submit(_materialize, mint_entities(wide), "entities")
+        stats = wide.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max(
+                (F.col("kind") == "method_impl").cast("int")
+            ).alias("has_impl"),
+        ).collect()[0]
+        entities = f_ent.result()
+    n_rows = stats["n"]
+    wide = _narrow(wide, n_rows, _WIDE_ROWS_PER_PARTITION, "mentions_wide")
+    mentions = _narrow(wide, n_rows, _JOIN_ROWS_PER_PARTITION, "mentions")
+    if stats["has_impl"]:
+        mentions = _materialize(
+            bind_method_impls(mentions), "mentions_cpp_bound"
+        )
+        wide = mentions
         entities = _materialize(mint_entities(mentions), "entities")
-    else:
-        # one action returns (row count, any-method_impl): the dual-width
-        # sizing count and the deferred-C++ probe share a scan instead of
-        # chaining two. Entities mint concurrently with it — speculative:
-        # mint_entities is partitioning-independent (window results keyed
-        # by stable sort keys), so minting from the pre-narrow view gives
-        # identical rows UNLESS a method_impl rewrite invalidates the
-        # mention store (C++ corpora only), in which case the re-mint
-        # below pays the old serial cost and the speculative frame is
-        # dropped (its checkpoint blocks are ContextCleaner-reclaimed).
-        # (This 2-thread overlap is kept at every scale: both jobs read
-        # the same checkpointed blocks and it measured neutral-to-positive
-        # at 2k; the scale-adaptive gate below governs the JOIN PHASE.)
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_ent = ex.submit(_materialize, mint_entities(wide), "entities")
-            stats = wide.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max(
-                    (F.col("kind") == "method_impl").cast("int")
-                ).alias("has_impl"),
-            ).collect()[0]
-            entities = f_ent.result()
-        n_rows = stats["n"]
-        wide = _narrow(wide, n_rows, _WIDE_ROWS_PER_PARTITION, "mentions_wide")
-        mentions = _narrow(wide, n_rows, _JOIN_ROWS_PER_PARTITION, "mentions")
-        if stats["has_impl"]:
-            mentions = _materialize(
-                bind_method_impls(mentions), "mentions_cpp_bound"
-            )
-            wide = mentions
-            entities = _materialize(mint_entities(mentions), "entities")
     return assemble_graph(
         mentions,
         entities,
         groups=groups,
         mentions_wide=wide,
-        concurrent=_concurrent_policy(n_rows),
     )
 
 
@@ -377,7 +316,6 @@ def assemble_graph(
     scope_docs: DataFrame | None = None,
     aux_mentions: DataFrame | None = None,
     mentions_wide: DataFrame | None = None,
-    concurrent: bool | None = None,
 ) -> GraphResult:
     """The join phase. Full mode: ``mentions`` covers every doc and the kept
     frames are None. Scoped (incremental) mode: ``mentions`` holds only the
@@ -390,12 +328,7 @@ def assemble_graph(
     resolution inside the scope sees the whole corpus's return types —
     without them a scoped doc calling ``v = make(); v.area()`` where
     ``make`` lives in an unaffected doc would lose its CALLS edge.
-
-    ``concurrent``: join-phase stage-submission policy (see
-    ``_concurrent_policy``); None = the CGR_SEQUENTIAL_STAGES env default.
     """
-    if concurrent is None:
-        concurrent = not os.environ.get("CGR_SEQUENTIAL_STAGES")
     registry: list = []
     documents = (
         all_docs
@@ -540,30 +473,25 @@ def assemble_graph(
             src = inh
         return inh, src, ancestor_closure(src)
 
-    if not concurrent:
-        inh_e, closure_src, closure = _closure_branch()
-        recv_cls = None  # resolve_calls computes + persists it
-        media_edges = media_plan
-    else:
-        # three independent branches: the closure chain is a serial run of
-        # sub-second actions (checkpoint + count per doubling) whose driver
-        # gaps leave the executor threads idle — the receiver-class map
-        # (consumed by the ladder's typed rungs right after) and the media
-        # attribution fill them. All three read only checkpointed parents.
-        # recv_cls MUST come from resolve_mentions — the frame the ladder
-        # reads modulo partitioning: in scoped mode it carries the aux
-        # out-of-scope `returns` rows the typed-receiver rungs need.
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            f_clo = ex.submit(_closure_branch)
-            f_recv = ex.submit(
-                _materialize,
-                resolve_receiver_classes(resolve_mentions, entities, alias),
-                "recv_cls",
-            )
-            f_media = ex.submit(_materialize, media_plan, "media")
-            inh_e, closure_src, closure = f_clo.result()
-            recv_cls = f_recv.result()
-            media_edges = f_media.result()
+    # three independent branches: the closure chain is a serial run of
+    # sub-second actions (checkpoint + count per doubling) whose driver
+    # gaps leave the executor threads idle — the receiver-class map
+    # (consumed by the ladder's typed rungs right after) and the media
+    # attribution fill them. All three read only checkpointed parents.
+    # recv_cls MUST come from resolve_mentions — the frame the ladder
+    # reads modulo partitioning: in scoped mode it carries the aux
+    # out-of-scope `returns` rows the typed-receiver rungs need.
+    with ThreadPoolExecutor(max_workers=3) as ex:
+        f_clo = ex.submit(_closure_branch)
+        f_recv = ex.submit(
+            _materialize,
+            resolve_receiver_classes(resolve_mentions, entities, alias),
+            "recv_cls",
+        )
+        f_media = ex.submit(_materialize, media_plan, "media")
+        inh_e, closure_src, closure = f_clo.result()
+        recv_cls = f_recv.result()
+        media_edges = f_media.result()
 
     ovr_plan = override_edges(
         entities, closure_src, closure, scope_docs=scope_docs
@@ -587,12 +515,8 @@ def assemble_graph(
     # at fixture scale). The override/MRO pass is independent of the ladder
     # (it reads entities + the checkpointed closure), so it materializes
     # concurrently — cutting it out of the edges_prov action's tree.
-    if not concurrent:
-        resolved = _materialize(resolved_plan, "resolved")
-        ovr_e = ovr_plan  # rides the edges_prov union lazily, as pre-r5
-    else:
-        _b = _materialize_all({"resolved": resolved_plan, "overrides": ovr_plan})
-        resolved, ovr_e = _b["resolved"], _b["overrides"]
+    _b = _materialize_all({"resolved": resolved_plan, "overrides": ovr_plan})
+    resolved, ovr_e = _b["resolved"], _b["overrides"]
     call_e = call_edges(resolved, entities)
 
     # ---- io capture group (off in DEFAULT_GROUPS, like the reference);
@@ -632,7 +556,6 @@ def assemble_graph(
                 "io_edges": io_edges(mentions, alias),
                 "exposes": endpoint_e.unionByName(route_e),
             },
-            concurrent=concurrent,
         )
         io_e, exposes_e = _io_b["io_edges"], _io_b["exposes"]
         # Scoped mode: the URL→endpoint and contract resolvers are
@@ -660,7 +583,6 @@ def assemble_graph(
                     ),
                     "exposes_all": exposes_e.unionByName(kept_exposes),
                 },
-                concurrent=concurrent,
             )
             io_all, exposes_all = _all_b["io_all"], _all_b["exposes_all"]
             rpc_all = rpc_e.unionByName(kept_exposes)
@@ -713,7 +635,6 @@ def assemble_graph(
                     dispatch_res
                 ),
             },
-            concurrent=concurrent,
         )
         io_group = [
             io_e,

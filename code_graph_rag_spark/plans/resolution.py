@@ -440,7 +440,8 @@ def resolve_calls(
     alias: DataFrame,
     closure: DataFrame | None = None,
     persist_registry: list | None = None,
-    recv_cls: DataFrame | None = None,
+    *,
+    recv_cls: DataFrame,
 ) -> DataFrame:
     """call/ref mentions → resolved target rows (one per variant of the
     winning natural QN).
@@ -448,9 +449,9 @@ def resolve_calls(
     ``closure``: optional ancestor closure (cls, anc, depth, ord) enabling
     the super() rung and inherited self-method resolution.
 
-    ``recv_cls``: optionally a pre-materialized receiver-class map (the
-    pipeline overlaps its computation with the inherits/closure branch —
-    see ``pipeline._materialize_all``); None = compute + persist here.
+    ``recv_cls``: the materialized receiver-class map
+    (``resolve_receiver_classes`` over the same resolution mentions; the
+    pipeline overlaps it with the inherits/closure branch).
 
     Output: mention_id, kind, doc_id, caller_qn, caller_label, priority,
     target_qn (natural), target_variant (qualified_name), target_label.
@@ -531,12 +532,6 @@ def resolve_calls(
     # call_processor.py:2815-2822): v = Circle(); v.m() → Circle.m.
     # The receiver-class map is small (distinct (module, expr) pairs);
     # AQE broadcasts the join at runtime.
-    if recv_cls is None:
-        recv_cls = resolve_receiver_classes(
-            mentions, entities, alias
-        ).persist()
-        if persist_registry is not None:
-            persist_registry.append(recv_cls)
     typed = calls.filter(F.col("recv_expr").isNotNull()).withColumn(
         "method", F.element_at(F.split("callee", "\\."), -1)
     )

@@ -12,6 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Driver heap default: about half of physical RAM, capped at 64g.
+
+    Local mode is driver-only, so this heap holds every executor thread's
+    shuffle/sort buffers plus the cached stage tables; the other half stays
+    free for the Python workers and the page cache."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(64, ram // 2 // 2**30))}g"
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "code_graph_rag_spark",
@@ -65,10 +75,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        # local mode = driver-only: the heap carries all 32 executor threads'
-        # shuffle/sort buffers + cached stage tables (box has 128 GiB;
-        # 16g OOM'd a 20k-doc build at 32 threads)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        # sized from host RAM (16g OOM'd a 20k-doc build at 32 threads on a
+        # 128 GiB box, where this default is the 64g cap)
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # default page size derives from driver memory/cores and lands at

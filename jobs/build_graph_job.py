@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Cluster entrypoint: spark-submit --py-files cgr_spark.zip jobs/build_graph_job.py
 
+  scripts/package_pyfiles.sh   # builds dist/cgr_spark.zip from the source tree
   spark-submit \\
       --py-files dist/cgr_spark.zip \\
       jobs/build_graph_job.py \\

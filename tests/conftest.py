@@ -19,8 +19,8 @@ def spark():
     # AQE + whole-stage codegen OFF: at fixture scale the per-stage
     # re-planning / Janino-compile fixed cost dominates actual execution
     # (bench.py runs both ON at sf0.1 — that path measures the real plans)
+    # width from SPARK_GRAFT_CPUS / nproc (get_spark's default)
     s = get_spark(
-        cores=8,
         shuffle_partitions=2,
         app_name="cgr_spark_tests",
         extra_conf={
@@ -58,7 +58,7 @@ def _drain_jvm_state(request):
     dead registrations and later tests run 3-5x slower than isolated
     (measured: the 5-build scoped-io test cost 647 s late in the suite vs
     ~160 s in a fresh session). Function-scoped on purpose — a full GC at
-    the test session's 8 threads is ~0.3 s, noise next to one leaked
+    8 threads is ~0.3 s, noise next to one leaked
     checkpoint generation; modules that never touch Spark skip the JVM
     call entirely (no active session → python gc only, ~ms)."""
     yield

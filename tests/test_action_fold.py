@@ -11,11 +11,25 @@ operator results, so the fold can never drift semantics.
 """
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
 
-def _njobs(spark) -> int:
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup())
+@contextmanager
+def _counted_jobs(spark):
+    """Run the block under a fresh job group; yields a callable returning
+    that group's job count. A unique group keeps the count exact however
+    many other jobs the session has run or evicted from its retained set."""
+    sc = spark.sparkContext
+    group = f"action-fold-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "test_action_fold job budget")
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_ancestor_closure_one_job_per_round(spark):
@@ -32,13 +46,13 @@ def test_ancestor_closure_one_job_per_round(spark):
         F.create_map(F.lit("base_index"), F.lit("0")).alias("props"),
         F.lit("d").alias("src_doc"),
     )
-    j0 = _njobs(spark)
-    clo = ancestor_closure(inh)
-    j1 = _njobs(spark)
+    with _counted_jobs(spark) as njobs:
+        clo = ancestor_closure(inh)
+        n = njobs()
     # executed rounds on an A→B→C chain: base + 1 growing doubling + 1
     # converged doubling = 3 counts; the fold makes each count the round's
     # ONLY job (pre-fold: 2 jobs per round = 6)
-    assert j1 - j0 <= 4, f"closure used {j1 - j0} jobs (fold regressed?)"
+    assert n <= 4, f"closure used {n} jobs (fold regressed?)"
     rows = sorted((r["cls"], r["anc"], r["depth"]) for r in clo.collect())
     assert rows == [("A", "B", 1), ("A", "C", 2), ("B", "C", 1)]
 
@@ -49,11 +63,11 @@ def test_connected_components_one_job_per_round(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "a int, b int"
     )
-    j0 = _njobs(spark)
-    cc = connected_components(pairs)
-    got = sorted((r["entity_id"], r["canonical_id"]) for r in cc.collect())
-    j1 = _njobs(spark)
+    with _counted_jobs(spark) as njobs:
+        cc = connected_components(pairs)
+        got = sorted((r["entity_id"], r["canonical_id"]) for r in cc.collect())
+        n = njobs()
     # 2 setup checkpoints + one signature job per star round (3 on this
     # fixture) + the caller's collect = 6; pre-fold this was 9
-    assert j1 - j0 <= 7, f"cc used {j1 - j0} jobs (fold regressed?)"
+    assert n <= 7, f"cc used {n} jobs (fold regressed?)"
     assert got == [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)]

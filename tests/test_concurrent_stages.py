@@ -1,20 +1,46 @@
-"""The concurrent-stage-submission path (pipeline._materialize_all + the
-3-way closure/recv_cls/media overlap) vs the CGR_SEQUENTIAL_STAGES=1
-fallback: both orderings must assemble the identical graph.
+"""Concurrent stage submission must not change the graph.
 
-The default suite exercises the concurrent path everywhere; this module
-guards the serial fallback knob (the A/B + escape hatch documented in
-BASELINE.md round-5) against drifting out of equivalence — e.g. a future
-edit feeding one path a differently-scoped frame (the recv_cls source
-bug class caught in review: it must come from resolve_mentions, not
-mentions)."""
+The join phase submits independent stage frames from driver threads
+(``pipeline._materialize_all``, the closure/recv_cls/media overlap and the
+entities/row-count overlap). This module builds the polyglot fixture twice:
+once with the real thread pools, and once with ``pipeline.ThreadPoolExecutor``
+swapped for an inline executor that runs each submitted function on the
+calling thread, in submission order (pool width 1). Both builds must yield
+identical node and edge sets.
+
+It guards the shared-ancestor precondition of ``_materialize_all``: a parent
+shared by two batch entries that is not already checkpointed would be
+computed twice by racing jobs, and ids minted twice would change the edges.
+"""
 
 from __future__ import annotations
 
-import os
+from concurrent.futures import Future
 
+from code_graph_rag_spark import pipeline
 from code_graph_rag_spark.fixtures import polyglot
-from code_graph_rag_spark.pipeline import build_graph
+
+
+class _InlineExecutor:
+    submitted = 0
+
+    def __init__(self, max_workers=None):
+        pass
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+    def submit(self, fn, *args, **kwargs):
+        _InlineExecutor.submitted += 1
+        fut = Future()
+        try:
+            fut.set_result(fn(*args, **kwargs))
+        except BaseException as e:  # surfaced by .result(), as a pool does
+            fut.set_exception(e)
+        return fut
 
 
 def _graph_tuples(g):
@@ -26,19 +52,17 @@ def _graph_tuples(g):
     return nodes, edges
 
 
-def test_sequential_fallback_equivalence(spark):
+def test_inline_executor_equivalence(spark, monkeypatch):
     docs = polyglot(spark)
-    g_conc = build_graph(docs)
-    conc = _graph_tuples(g_conc)
-    g_conc.unpersist()
+    g_pool = pipeline.build_graph(docs)
+    pooled = _graph_tuples(g_pool)
+    g_pool.unpersist()
 
-    os.environ["CGR_SEQUENTIAL_STAGES"] = "1"
-    try:
-        g_seq = build_graph(docs)
-        seq = _graph_tuples(g_seq)
-        g_seq.unpersist()
-    finally:
-        del os.environ["CGR_SEQUENTIAL_STAGES"]
+    monkeypatch.setattr(pipeline, "ThreadPoolExecutor", _InlineExecutor)
+    g_inline = pipeline.build_graph(docs)
+    inline = _graph_tuples(g_inline)
+    g_inline.unpersist()
+    assert _InlineExecutor.submitted > 0, "the build bypassed the executor"
 
-    assert conc[0] == seq[0], "node sets diverge between submission modes"
-    assert conc[1] == seq[1], "edge sets diverge between submission modes"
+    assert pooled[0] == inline[0], "node sets diverge between pool widths"
+    assert pooled[1] == inline[1], "edge sets diverge between pool widths"

@@ -203,7 +203,7 @@ def test_resume_from_mentions_stage(spark, store_dir):
 
 
 def test_canonicalization_linking(spark):
-    """MinHash-LSH linking + salted CC merges near-identical QNs."""
+    """MinHash-LSH linking + star-round CC merges near-identical QNs."""
     from code_graph_rag_spark.linking import (
         canonicalize_entities,
         connected_components,
